@@ -1,24 +1,29 @@
 package graft
 
-import graft.streaming.{InMemoryKVStore, KVStoreRegistry, OrderStreamPipeline, StreamConfig}
+import graft.streaming.{OrderStreamPipeline, RespKVStore, StreamConfig}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** The runnable equivalent of the reference's streaming application: Kafka
-  * order events → per-day conditional metrics → accumulator KV sink, with
+  * order events → per-day conditional metrics → Redis `HINCRBY` sink, with
   * offsets managed by the checkpoint WAL. Configure with system
   * properties (fail-fast, see [[StreamConfig]]):
   *
   * {{{
   * spark-submit --class graft.StreamApp \
   *   -Dgraft.kafka.bootstrap.servers=host:9092 -Dgraft.kafka.topic=orders \
+  *   -Dgraft.sink.redis=redis-host:6379 \
   *   -Dgraft.checkpoint.dir=/path/ckpt [-Dgraft.sink.key.prefix=n-ko-] \
   *   [-Dgraft.trigger.seconds=10] [-Dgraft.idempotent=true] app.jar
   * }}}
   *
-  * The sink backend defaults to the in-memory store (single-JVM/demo); a
-  * production deployment registers a network-backed [[graft.streaming.KVStore]]
-  * under the name "default" before start.
+  * The sink is the Redis at `sink.redis`, spoken to over RESP by
+  * [[graft.streaming.RespKVStore]]. Day hashes are `<prefix><yyyy-MM-dd>`
+  * and the idempotent mode's applied-batch set is
+  * `<prefix>applied_batches`, so apps with different prefixes can share
+  * one Redis. Batch ids restart at 0 with a fresh checkpoint, so a fresh
+  * checkpoint needs a fresh prefix: reusing one would skip the new
+  * query's batches as already applied.
   */
 object StreamApp {
   def main(args: Array[String]): Unit = {
@@ -34,9 +39,9 @@ object StreamApp {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
 
-    if (KVStoreRegistry.getOption("default").isEmpty)
-      KVStoreRegistry.register("default", new InMemoryKVStore)
-    val pipeline = new OrderStreamPipeline("default", cfg.keyPrefix, idempotent)
+    val kv = new RespKVStore(cfg.redisHost, cfg.redisPort,
+      appliedSetKey = cfg.keyPrefix + "applied_batches")
+    val pipeline = new OrderStreamPipeline(kv, cfg.keyPrefix, idempotent)
     val raw = OrderStreamPipeline.kafkaSource(
       spark, cfg.bootstrapServers, cfg.topic)
     val query = pipeline.start(raw, cfg.checkpointDir,

@@ -1,118 +1,41 @@
 package graft
 
-import graft.sources.MockOrderGenerator
-import graft.streaming.{InMemoryKVStore, KVStoreRegistry, OrderStreamPipeline}
 import org.apache.spark.sql.SparkSession
 
-/** Streaming-path throughput: generates N wire-format order records and
-  * drives them through the micro-batch sink path (parse → conditional
-  * aggregate → KV deltas), printing records/sec. The reference's design
-  * ceiling was 2 cores and tens of records per 10 s batch; this measures
-  * the same pipeline shape at millions of records per batch.
-  * Usage: runMain graft.StreamBench [numRecords] [numBatches]
+/** Ingest-path throughput probes, one per `SPARK_GRAFT_STREAM` mode, each
+  * printing one JSON metric line. The order stream's sink throughput and
+  * latency are measured by `python3 perfbench/run.py --workload
+  * orders_stream`.
+  * Usage: SPARK_GRAFT_STREAM=<mode> runMain graft.StreamBench
+  *        [numRecords] [numBatches]
   */
 object StreamBench {
+  private val modes: Seq[(String, (SparkSession, Long, Int) => Unit)] = Seq(
+    ("span", (s, n, b) => spanIngest(s, n.toInt, b)),
+    ("docs", (s, n, b) => docsIngest(s, n.toInt, b)),
+    ("docsstream", (s, n, b) => docsStreamIngest(s, n.toInt, b)),
+    ("gatedstream", (s, n, b) => gatedStreamIngest(s, n.toInt, b)),
+    ("maint", (s, n, _) => docsMaintenance(s, n.toInt)),
+    ("vecsmaint", (s, n, _) => vecsMaintenance(s, n)),
+    ("vecsstream", (s, n, b) => vecsStreamIngest(s, n, b)),
+    ("vecsloop", (s, n, b) => vecsLoop(s, n, b)),
+    ("emb", (s, n, b) => embIngest(s, n, b)),
+    ("neardup", (s, n, b) => nearDupStream(s, n.toInt, b)),
+    ("kll", (s, n, b) => kllStream(s, n, b)))
+
   def main(args: Array[String]): Unit = {
+    val mode = sys.env.getOrElse("SPARK_GRAFT_STREAM", "")
+    val run = modes.toMap.getOrElse(mode, {
+      System.err.println(s"usage: SPARK_GRAFT_STREAM=<${modes.map(_._1).mkString("|")}> " +
+        "runMain graft.StreamBench [numRecords] [numBatches]")
+      sys.exit(2)
+    })
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val batches = args.drop(1).headOption.map(_.toInt).getOrElse(4)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus)
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("span")) {
-      spanIngest(spark, n.toInt, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("docsstream")) {
-      docsStreamIngest(spark, n.toInt, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("gatedstream")) {
-      gatedStreamIngest(spark, n.toInt, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("docs")) {
-      docsIngest(spark, n.toInt, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("maint")) {
-      docsMaintenance(spark, n.toInt); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("vecsmaint")) {
-      vecsMaintenance(spark, n); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("vecsstream")) {
-      vecsStreamIngest(spark, n, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("vecsloop")) {
-      vecsLoop(spark, n, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("emb")) {
-      embIngest(spark, n, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("neardup")) {
-      nearDupStream(spark, n.toInt, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("kll")) {
-      kllStream(spark, n, batches); spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM").contains("resp")) {
-      respIngest(spark, n, batches); spark.stop(); return
-    }
-
-    KVStoreRegistry.register("bench", new InMemoryKVStore)
-    val pipeline = new OrderStreamPipeline("bench")
-    val batch = MockOrderGenerator.wireJson(
-      MockOrderGenerator.orders(spark, n)).cache()
-    batch.count()   // materialize input so generation isn't timed
-    // warmup
-    pipeline.applyBatch(batch.limit(10000), -1L)
-    val t0 = System.nanoTime()
-    (0 until batches).foreach(i => pipeline.applyBatch(batch, i.toLong))
-    val sec = (System.nanoTime() - t0) / 1e9
-    val total = n * batches
-    println(f"""{"metric":"stream_records_per_sec","value":${total / sec}%.0f,"records":$total,"sec":$sec%.2f}""")
+    run(spark, n, batches)
     spark.stop()
-  }
-
-  /** The reference's ACTUAL deployment shape end-to-end
-    * (`SPARK_GRAFT_STREAM=resp`): parse → conditional aggregate →
-    * HINCRBY over a real socket speaking real RESP wire, against the
-    * in-process [[graft.streaming.RespServer]] — the number that sits
-    * next to the in-memory sink's records/sec. The sink traffic is one
-    * row per distinct day per batch (3 HINCRBYs each) regardless of
-    * batch size, so the socket round-trips amortize to nothing as
-    * batches grow — this mode MEASURES that claim rather than assuming
-    * it, and certifies the accumulated hash equals the in-memory sink's
-    * on the same batches. */
-  private def respIngest(spark: SparkSession, n: Long, batches: Int): Unit = {
-    import graft.streaming.{InMemoryKVStore, RespKVStore, RespServer}
-    val server = new RespServer()
-    server.start()
-    try {
-      val resp = new RespKVStore("127.0.0.1", server.port)
-      val respPipe = new OrderStreamPipeline(resp, "n-ko-", false)
-      val batch = MockOrderGenerator.wireJson(
-        MockOrderGenerator.orders(spark, n)).cache()
-      batch.count() // materialize input so generation isn't timed
-      respPipe.applyBatch(batch.limit(10000), -1L) // warmup
-      server.state.hashes.clear()
-      val t0 = System.nanoTime()
-      (0 until batches).foreach(i => respPipe.applyBatch(batch, i.toLong))
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = n * batches
-      // same batches through the in-memory sink: the RESP hash must be
-      // byte-identical state — the socket is transport, not semantics.
-      // (Registry-addressed: a bare InMemoryKVStore handle would be
-      // SERIALIZED into task closures and increment throwaway copies.)
-      val mem = new InMemoryKVStore
-      KVStoreRegistry.register("respcmp", mem)
-      val memPipe = new OrderStreamPipeline("respcmp")
-      (0 until batches).foreach(i => memPipe.applyBatch(batch, i.toLong))
-      import scala.jdk.CollectionConverters._
-      val days = server.state.hashes.keySet.asScala.toSeq.sorted
-      require(days.nonEmpty, "resp bench: sink received no day keys")
-      days.foreach { day =>
-        require(resp.hgetAll(day) == mem.hgetAll(day),
-          s"RESP sink state diverged from in-memory sink at $day: " +
-            s"resp=${resp.hgetAll(day)} mem=${mem.hgetAll(day)}")
-      }
-      println(f"""{"metric":"resp_stream_records_per_sec","value":${total / sec}%.0f,"records":$total,"sec":$sec%.2f,"day_keys":${days.size},"hincrby_calls":${3 * days.size * batches},"conns":${server.accepted}}""")
-    } finally { server.stop(); RespKVStore.resetConnections() }
   }
 
   /** Price the fenced streaming KLL table: per-batch fold throughput

@@ -23,6 +23,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    `hincrBy` deltas to a [[KVStore]] — the reference's
   *    accumulator-in-sink design, where the external store performs the
   *    cross-batch ("final-final") merge and Spark holds no streaming state.
+  *    The store is a serializable handle ([[RespKVStore]]) that executor
+  *    closures capture directly.
   *  - delivery: offsets advance via the checkpoint WAL only after the
   *    batch completes → at-least-once, same as the reference's
   *    post-sink `commitAsync`. `idempotent = true` upgrades to
@@ -36,14 +38,6 @@ final class OrderStreamPipeline(
     store: KVStore,
     keyPrefix: String,
     idempotent: Boolean) extends Serializable {
-
-  /** Registry-addressed store (JVM-singleton backends; tests/local mode).
-    * The primary constructor takes any serializable [[KVStore]] handle —
-    * e.g. [[SocketKVStore]] — which executor closures capture directly, so
-    * nothing needs registering on executors. */
-  def this(storeName: String, keyPrefix: String = "n-ko-",
-           idempotent: Boolean = false) =
-    this(KVStore.named(storeName), keyPrefix, idempotent)
 
   /** Aggregate one micro-batch and apply deltas to the store. Public so
     * unit tests can exercise replay semantics directly.

@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException,
   IOException, InputStream, OutputStream}
-import java.net.Socket
+import java.net.{InetAddress, InetSocketAddress, ProtocolException,
+  ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
@@ -23,9 +24,9 @@ import java.util.concurrent.atomic.AtomicLong
   *  - `markBatch` → `SADD <appliedSetKey> id` → 1 added / 0 present
   *  - `batchSeen` → `SISMEMBER <appliedSetKey> id`
   *
-  * The instance is a cheap serializable handle (the [[SocketKVStore]]
-  * pattern): executor closures capture it, and the actual connection is
-  * established lazily ONCE PER JVM PER ENDPOINT in [[RespKVStore.pooled]]
+  * The instance is a cheap serializable handle: executor closures capture
+  * it, and the actual connection is established lazily ONCE PER JVM PER
+  * ENDPOINT in [[RespKVStore.pooled]]
   * — per-executor connection reuse, the opposite of the reference's
   * pool-per-call leak. A protocol-level `-ERR` reply throws but keeps the
   * connection (the link is healthy); a transport failure evicts the
@@ -75,7 +76,7 @@ final class RespKVStore(host: String, port: Int,
 
 object RespKVStore {
 
-  /** Parsed RESP reply. Client-side only — the server works on streams. */
+  /** Parsed RESP value: a reply on the client, a command on the server. */
   sealed trait Resp
   final case class RSimple(s: String) extends Resp
   final case class RErr(msg: String) extends Resp
@@ -97,6 +98,10 @@ object RespKVStore {
     out.flush()
   }
 
+  /** Malformed framing: the stream position is lost, so the connection
+    * cannot be reused. An IOException, so the client evicts it. */
+  private def protocolError(msg: String) = new ProtocolException(s"RESP: $msg")
+
   /** One CRLF-terminated header line (the bytes after the type marker). */
   private def readLine(in: InputStream): String = {
     val buf = new java.io.ByteArrayOutputStream(32)
@@ -106,20 +111,23 @@ object RespKVStore {
       buf.write(c)
       c = in.read()
     }
-    if (in.read() != '\n') throw new IOException("RESP: CR not followed by LF")
+    if (in.read() != '\n') throw protocolError("CR not followed by LF")
     new String(buf.toByteArray, UTF_8)
   }
+
+  private def readLength(in: InputStream): Int =
+    readLine(in).toIntOption.getOrElse(throw protocolError("invalid length"))
 
   private[streaming] def readResp(in: InputStream): Resp = {
     val t = in.read()
     if (t < 0) throw new EOFException("RESP stream closed")
-    val line = readLine(in)
     t match {
-      case '+' => RSimple(line)
-      case '-' => RErr(line)
-      case ':' => RInt(line.toLong)
+      case '+' => RSimple(readLine(in))
+      case '-' => RErr(readLine(in))
+      case ':' => RInt(readLine(in).toLongOption
+        .getOrElse(throw protocolError("invalid integer")))
       case '$' =>
-        val n = line.toInt
+        val n = readLength(in)
         if (n < 0) RNull
         else {
           val b = new Array[Byte](n)
@@ -130,15 +138,15 @@ object RespKVStore {
             off += r
           }
           if (in.read() != '\r' || in.read() != '\n')
-            throw new IOException("RESP: bulk string not CRLF-terminated")
+            throw protocolError("bulk string not CRLF-terminated")
           RBulk(new String(b, UTF_8))
         }
       case '*' =>
-        val n = line.toInt
+        val n = readLength(in)
         if (n < 0) RNull
         else RArr((0 until n).map(_ => readResp(in)))
       case other =>
-        throw new IOException(s"RESP: unknown type byte $other")
+        throw protocolError(s"unknown type byte $other")
     }
   }
 
@@ -151,9 +159,11 @@ object RespKVStore {
 
   private val conns = new ConcurrentHashMap[(String, Int), Conn]()
 
-  /** One shared connection per JVM per endpoint, calls serialized on it;
-    * eviction on transport failure so the next call reconnects — the
-    * [[SocketKVStore.pooled]] protocol, verbatim, for RESP streams. */
+  /** One shared connection per JVM per endpoint; calls are serialized on
+    * it (a production client would hold a pool instead of a mutex). A dead
+    * connection is evicted on failure so the NEXT call reconnects —
+    * without the eviction one server restart would poison the cache entry
+    * and fail every later call to that endpoint for the life of the JVM. */
   private def pooled(host: String, port: Int, args: Seq[String]): Resp = {
     val key = (host, port)
     val c = conns.computeIfAbsent(key, _ => new Conn(host, port))
@@ -179,8 +189,11 @@ object RespKVStore {
     conns.clear()
   }
 
-  /** Sever every cached connection WITHOUT forgetting it — crash-injection
-    * hook, same semantics as [[SocketKVStore.killConnections]]. */
+  /** Sever every cached connection WITHOUT forgetting it (crash-injection
+    * test hook): the next call on a severed connection fails at the
+    * transport level and takes the eviction path — to the pooled client
+    * this is indistinguishable from the link dying under a running task,
+    * which is exactly the executor-side failure the crash specs inject. */
   def killConnections(): Unit =
     conns.values.forEach(c => try c.socket.close() catch { case _: Throwable => () })
 }
@@ -219,65 +232,111 @@ final class RespState {
   * uses (HINCRBY, HGETALL, SADD, SISMEMBER, PING), so [[RespKVStore]] is
   * exercised against REAL RESP framing across a real socket — byte-level
   * compatible with what redis-cli would send for the same commands (the
-  * specs pin this with handcrafted wire bytes). Lifecycle (fixed-port
-  * restart with retry, restart over a surviving [[RespState]], stop()
-  * drops live clients) is [[SocketServerBase]], shared with
-  * [[KVServer]]. */
+  * specs pin this with handcrafted wire bytes). Commands are read with
+  * the client's own [[RespKVStore.readResp]]; malformed framing gets
+  * `-ERR Protocol error` and a closed connection, as Redis does.
+  *
+  * Pass `fixedPort` and `backing` to restart a server over surviving
+  * state — the serving process dies, the data doesn't, which is how a
+  * persistent Redis (AOF) behaves across a crash. */
 final class RespServer(bind: String = "127.0.0.1", fixedPort: Int = 0,
-                       backing: RespState = new RespState)
-    extends SocketServerBase(bind, fixedPort) {
+                       backing: RespState = new RespState) {
+  import RespKVStore.{RArr, RBulk, readResp}
+
   val state: RespState = backing
 
   /** Total connections accepted — the spec hook proving per-JVM reuse. */
   @volatile var accepted: Int = 0
 
-  override protected def onAccept(): Unit = accepted += 1
+  // SO_REUSEADDR before bind: a fixed-port restart right after a stop()
+  // must not fail on the dead process's lingering TIME_WAIT sockets —
+  // restartability is the point of the fixed-port mode. Reuseaddr does
+  // not cover the port being transiently held as some unrelated outbound
+  // connection's local ephemeral port in the gap between the old server's
+  // close and this bind, so fixed-port mode also retries the bind briefly
+  // (such holders are short-lived by nature).
+  private val server = {
+    val s = new ServerSocket()
+    s.setReuseAddress(true)
+    val addr = new InetSocketAddress(InetAddress.getByName(bind), fixedPort)
+    var attempt = 0
+    var bound = false
+    while (!bound) {
+      try { s.bind(addr, 64); bound = true }
+      catch {
+        case _: java.net.BindException if fixedPort != 0 && attempt < 100 =>
+          attempt += 1; Thread.sleep(100)
+      }
+    }
+    s
+  }
+  private val clients = ConcurrentHashMap.newKeySet[Socket]()
+  @volatile private var running = false
 
-  override protected def serveLoop(sock: Socket): Unit = {
+  def port: Int = server.getLocalPort
+
+  def start(): Unit = {
+    running = true
+    val acceptor = new Thread(() => {
+      while (running && !server.isClosed) {
+        try {
+          val sock = server.accept()
+          accepted += 1
+          val t = new Thread(() => serve(sock))
+          t.setDaemon(true)
+          t.start()
+        } catch {
+          // closed during stop() exits via the loop condition; any other
+          // accept failure (fd exhaustion, transient socket error) must not
+          // hot-spin — back off briefly before retrying
+          case _: Throwable => if (running && !server.isClosed) Thread.sleep(50)
+        }
+      }
+    })
+    acceptor.setDaemon(true)
+    acceptor.start()
+  }
+
+  private def serve(sock: Socket): Unit = {
+    clients.add(sock)
+    // Re-check AFTER registering: a connection accepted in the window
+    // between stop()'s `running = false` and its client sweep would
+    // otherwise be served by a "stopped" server — the half-open behavior
+    // stop() exists to prevent. Register-then-check pairs with stop()'s
+    // flag-then-sweep: whichever thread runs second sees the other's
+    // write, so the socket is closed on at least one path.
+    if (!running) {
+      clients.remove(sock)
+      try sock.close() catch { case _: Throwable => () }
+      return
+    }
+    try serveLoop(sock)
+    catch { case _: IOException => () } // EOF, or closed under us
+    finally { clients.remove(sock); sock.close() }
+  }
+
+  /** Read commands and write replies until EOF or a framing error. */
+  private def serveLoop(sock: Socket): Unit = {
     val in = new BufferedInputStream(sock.getInputStream)
     val out = new BufferedOutputStream(sock.getOutputStream)
+    def reply(bytes: Array[Byte]): Unit = { out.write(bytes); out.flush() }
     while (true) {
-      val cmd = readCommand(in)
-      if (cmd == null) return
-      out.write(try handle(cmd) catch {
-        case e: Throwable => s"-ERR ${e.getMessage}\r\n".getBytes(UTF_8)
-      })
-      out.flush()
+      val cmd = try readResp(in) match {
+        case RArr(items) if items.forall(_.isInstanceOf[RBulk]) =>
+          items.collect { case RBulk(s) => s }
+        case _ => throw new ProtocolException("expected an array of bulk strings")
+      } catch {
+        case e: ProtocolException =>
+          reply(error(s"Protocol error: ${e.getMessage}"))
+          return
+      }
+      reply(try handle(cmd) catch { case e: Throwable => error(e.getMessage) })
     }
   }
 
-  /** Read one RESP command array; null on clean EOF before a command. */
-  private def readCommand(in: InputStream): Seq[String] = {
-    val first = in.read()
-    if (first < 0) return null
-    require(first == '*',
-      s"RESP commands must be arrays, got type byte $first")
-    def line(): String = {
-      val buf = new java.io.ByteArrayOutputStream(16)
-      var c = in.read()
-      while (c != '\r') {
-        if (c < 0) throw new EOFException("closed mid-command")
-        buf.write(c); c = in.read()
-      }
-      if (in.read() != '\n') throw new IOException("CR without LF")
-      new String(buf.toByteArray, UTF_8)
-    }
-    val n = line().toInt
-    (0 until n).map { _ =>
-      require(in.read() == '$', "command array element must be a bulk string")
-      val len = line().toInt
-      val b = new Array[Byte](len)
-      var off = 0
-      while (off < len) {
-        val r = in.read(b, off, len - off)
-        if (r < 0) throw new EOFException("closed mid-bulk")
-        off += r
-      }
-      if (in.read() != '\r' || in.read() != '\n')
-        throw new IOException("bulk not CRLF-terminated")
-      new String(b, UTF_8)
-    }
-  }
+  /** `-ERR` line; CR/LF in the message would end the reply early. */
+  private def error(msg: String): Array[Byte] =
+    s"-ERR ${String.valueOf(msg).replaceAll("[\r\n]", " ")}\r\n".getBytes(UTF_8)
 
   private def bulk(s: String): String = {
     val b = s.getBytes(UTF_8)
@@ -300,5 +359,15 @@ final class RespServer(bind: String = "127.0.0.1", fixedPort: Int = 0,
       case other => s"-ERR unknown command '$other'\r\n"
     }
     reply.getBytes(UTF_8)
+  }
+
+  /** Stop accepting AND drop live client connections — a restart must
+    * look like a real server death to pooled clients, not a half-open
+    * socket that keeps serving from the old process. */
+  def stop(): Unit = {
+    running = false
+    try server.close() catch { case _: Throwable => () }
+    clients.forEach(s => try s.close() catch { case _: Throwable => () })
+    clients.clear()
   }
 }

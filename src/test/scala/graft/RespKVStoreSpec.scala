@@ -54,14 +54,33 @@ class RespKVStoreSpec extends SparkSpec {
       }
       assert(err.startsWith("-ERR"), err)
       sock.close()
+      // malformed framing: a non-array command (inline or another RESP
+      // type), a negative or non-numeric bulk length, a nested array and
+      // a bulk without its CRLF each get `-ERR Protocol error` and a
+      // closed connection, and the server keeps serving new clients
+      Seq("PING\r\n", "+PING\r\n", "*1\r\n$-1\r\n", "*2\r\n$4\r\nPING\r\n$-7\r\n",
+          "*1\r\n$x\r\n", "*1\r\n*1\r\n$4\r\nPING\r\n", "*1\r\n$4\r\nPINGxx"
+      ).foreach { bad =>
+        val s = new java.net.Socket("127.0.0.1", server.port)
+        s.getOutputStream.write(bad.getBytes(UTF_8)); s.getOutputStream.flush()
+        val reply = new String(s.getInputStream.readAllBytes(), UTF_8)
+        assert(reply.startsWith("-ERR Protocol error") && reply.endsWith("\r\n") &&
+          reply.indexOf('\n') == reply.length - 1, s"${bad.trim}: $reply")
+        s.close()
+      }
+      val again = new java.net.Socket("127.0.0.1", server.port)
+      again.getOutputStream.write("*1\r\n$4\r\nPING\r\n".getBytes(UTF_8))
+      val pong = new Array[Byte](7)
+      assert(again.getInputStream.readNBytes(pong, 0, 7) == 7 &&
+        new String(pong, UTF_8) == "+PONG\r\n")
+      again.close()
     } finally { server.stop(); RespKVStore.resetConnections() }
   }
 
   test("client round trip: binary-unsafe keys and fields survive RESP framing") {
     // RESP bulk strings are length-prefixed, never parsed — spaces,
     // CRLFs, unicode, and empty strings must all pass through unharmed
-    // (the line-protocol SocketKVStore needs base64 for this; RESP
-    // is binary-safe natively)
+    // (RESP is binary-safe natively, no escaping needed)
     val server = new RespServer()
     server.start()
     try {
@@ -179,6 +198,19 @@ class RespKVStoreSpec extends SparkSpec {
       pipeline.applyBatch(batch, 0L)
       assert(store.hgetAll("n-ko-2024-03-01") ==
         Map("total" -> 3L, "success" -> 2L, "fee" -> 130L))
+      // a multi-partition apply: several tasks share the JVM-pooled
+      // connection, and its replay is again skipped
+      val spread = Seq(
+        wire("2024-05-01 09:00:00", 40, "1"),
+        wire("2024-05-01 10:00:00", 25, "0"),
+        wire("2024-05-02 08:00:00", 11, "1")).toDF("value").repartition(3)
+      (1 to 2).foreach { _ =>
+        pipeline.applyBatch(spread, 10L)
+        assert(server.state.hgetAll("n-ko-2024-05-01") ==
+          Map("total" -> 2L, "success" -> 1L, "fee" -> 40L))
+        assert(server.state.hgetAll("n-ko-2024-05-02") ==
+          Map("total" -> 1L, "success" -> 1L, "fee" -> 11L))
+      }
     } finally { server.stop(); RespKVStore.resetConnections() }
   }
 }
